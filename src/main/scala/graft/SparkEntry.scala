@@ -32,7 +32,10 @@ object SparkEntry {
   private def events(dir: String): GraftSource =
     GraftSource.of(table = Some(s"$dir/events.parquet"), timestampField = Some("ts"))
 
-  private val scratchDir = "/root/repo/target/graft-scratch"
+  // the round-trip and store queries write under the working directory's
+  // target/, so a checkout anywhere writes only into its own tree
+  private val scratchDir =
+    java.nio.file.Paths.get(System.getProperty("user.dir"), "target", "graft-scratch").toString
 
   /** Derived entity frame for the PIT queries: every user with a
     * deterministic per-user entity timestamp spread over Jan 8-27.

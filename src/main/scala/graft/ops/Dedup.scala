@@ -622,7 +622,7 @@ object Dedup {
     var labels = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("cluster"))
     // handle to the previous iteration's checkpoint so its blocks release
-    // once the next one materializes (the trainBpeMerges discipline): at
+    // once the next one materializes (the trainWordPieceMerges discipline): at
     // most two label snapshots live in executor storage, not one per
     // iteration. `p` and the FINAL labels checkpoint stay persisted — the
     // returned (lazy) plan reads them.
@@ -1678,7 +1678,18 @@ object Dedup {
     // freq, gram, POSITION) — the position key makes equal-gram ties a
     // total order, which the location filter's proof needs — keep the
     // first plen with their positions; checkpointed because the candidate
-    // SELF-JOIN consumes it twice
+    // SELF-JOIN consumes it twice.
+    // The candidate join's cost is its OUTPUT — the per-gram f² pair
+    // expansion and the codegen'd threshold verify — while its input is a
+    // few MB of prefix rows: an exchange planned for the join gets
+    // collapsed to ONE task by AQE's byte-based partition coalescing
+    // (measured r20: 3.1 s of a 4.4 s query in a single-task stage). So the
+    // prefix table is hash-partitioned on the join key ONCE, by a
+    // user-specified repartition (AQE never coalesces those) ahead of its
+    // checkpoint: the checkpoint keeps that partitioning, both self-join
+    // sides read it in place, and the join plans no exchange at all while
+    // the expansion stays spread over every session partition
+    val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
     val pref = ex.join(dfc, "_g")
       .groupBy(col("_id"))
       .agg(array_sort(collect_list(
@@ -1694,6 +1705,7 @@ object Dedup {
         explode(slice(col("_hs"), 1, plen)).as("_e"))
       .select(col("_id"), col("_s"), col("_len"),
         col("_e._g").as("_g"), col("_e._p").as("_p"))
+      .repartition(nPart, col("_g"))
       .localCheckpoint(false)
     // the ED-Join LOCATION filter rides the candidate join: distance-t
     // pairs must share a prefix gram within t POSITIONS (with prefixes
@@ -1704,22 +1716,10 @@ object Dedup {
     // On serial-number corpora the value-only filter admits f² pairs per
     // hot tail gram (measured 10M candidates / 15k names at sf0.1); the
     // position predicate cuts that to the truly alignable pairs
-    // the candidate join's cost is its OUTPUT — the per-gram f² pair
-    // expansion and the codegen'd threshold verify — while its shuffle
-    // INPUT is a few MB of prefix rows: AQE's byte-based partition
-    // coalescing therefore collapses the join to ONE task (measured r20:
-    // 3.1 s of a 4.4 s query in a single-task stage). Pinning both sides
-    // as user-specified repartitions on the join key — the same exchange
-    // EnsureRequirements would plan, same session partition count — keeps
-    // the expansion parallel at every scale; AQE never coalesces
-    // user-specified repartitions
-    val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
     val candBig = pref.select(col("_id").as("_aid"), col("_s").as("_as"),
         col("_len").as("_al"), col("_g"), col("_p").as("_pa"))
-      .repartition(nPart, col("_g"))
       .join(pref.select(col("_id").as("_bid"), col("_s").as("_bs"),
-        col("_len").as("_bl"), col("_g"), col("_p").as("_pb"))
-        .repartition(nPart, col("_g")), Seq("_g"))
+        col("_len").as("_bl"), col("_g"), col("_p").as("_pb")), Seq("_g"))
       .filter(col("_aid") < col("_bid") &&
         abs(col("_al") - col("_bl")) <= maxDistance &&
         abs(col("_pa") - col("_pb")) <= maxDistance)

@@ -1505,24 +1505,21 @@ object TextAnalysis {
     * its text, and the encoder's output decodes byte-exactly back to the
     * space-joined token stream.
     *
-    * Shape at 100 TB (the [[graft.ops.Dedup.connectedComponents]] loop
-    * discipline): the corpus is scanned ONCE for the word-frequency table;
-    * every iteration after that is a narrow pair-count aggregation over the
-    * VOCABULARY (pair generation in-row via the native `WordPairs` kernel,
-    * counts weighted by `cnt` so corpus size never re-enters), one
-    * 1-row driver collect for the winner, and a checkpointed one-column
-    * rewrite of the symbol arrays. The driver holds only the merge table
-    * (`numMerges` rows); vocabulary state stays distributed. Each rank's
-    * checkpoint is RELEASED as soon as its successor materializes
-    * ([[org.apache.spark.sql.graft.CheckpointUtil]]) — executor storage
-    * holds at most two vocabulary snapshots at any instant, not one per
-    * rank. Cost model for a production run: ranks are inherently
-    * sequential (each merge depends on the counts AFTER the previous one),
-    * so a 32k-merge train is 32k vocabulary-sized jobs — minutes-to-hours
-    * of fixed scheduling overhead regardless of corpus size; budget
-    * accordingly and train on a sample when the corpus is 100 TB (word
-    * frequencies converge long before that) — `samplePercent` IS that knob:
-    * the deterministic md5-bucket rule over the text column (the
+    * Shape at 100 TB: the corpus is scanned ONCE, by a distributed
+    * aggregation to the word-frequency table `(cnt, syms)`; everything
+    * after that is ONE vocabulary-sized task. The table coalesces into a
+    * single partition whose task runs the incremental merge loop
+    * ([[org.apache.spark.sql.graft.BpeTrainer]]: live pair counts, per-pair
+    * word lists, a lazily invalidated max-heap) and ships back only the
+    * `numMerges`-row merge table. Ranks are inherently sequential (each
+    * merge depends on the counts AFTER the previous one), so this is how
+    * single-machine BPE trainers run, and the merge count buys no Spark
+    * jobs: a 12-merge and a 32k-merge train schedule the same jobs.
+    * Memory bound: that task holds the vocabulary — every distinct word's
+    * symbol array plus its pair index — and nothing survives the call in
+    * executor storage. When the vocabulary outgrows one task,
+    * `samplePercent` IS the lever (word frequencies converge long before
+    * 100 TB): the deterministic md5-bucket rule over the text column (the
     * [[Similarity.kmeansAssign]] `trainPercent` pattern), so the sampled
     * word table — and therefore the merge table — is a pure function of
     * (corpus, percent), reproducible across runs, engines, and
@@ -1546,7 +1543,8 @@ object TextAnalysis {
         if (sampled.isEmpty) df else sampled
       }
     val spark = df.sparkSession
-    import org.apache.spark.sql.graft.{BpeMergeAdjacent, ByteSyms, WordPairs}
+    import org.apache.spark.sql.graft.{BpeTrainer, ByteSyms}
+    import org.apache.spark.unsafe.types.UTF8String
     // Byte mode trains over EVERY token — each word's UTF-8 bytes map
     // through the reversible [[org.apache.spark.sql.graft.ByteAlphabet]]
     // (GPT-2 bytes_to_unicode), so multilingual text participates instead of
@@ -1556,7 +1554,8 @@ object TextAnalysis {
     // stream byte-decodable back to the space-joined tokens); prefixed and
     // unprefixed occurrences of a word are distinct training words, exactly
     // as in the original scheme. Alphabet chars never include the ASCII
-    // space, so the space-joined pair keys below stay lossless in both
+    // space, so the encoder's space-joined pair keys
+    // ([[org.apache.spark.sql.graft.BpeMergeTable]]) stay lossless in both
     // modes.
     // per-row-heavy word build (tokenize + rlike / byte mapping): spread
     // the narrow text projection so a single-split scan doesn't run it on
@@ -1576,46 +1575,15 @@ object TextAnalysis {
           .select(col("cnt"),
             transform(sequence(lit(1), length(col("word"))),
               i => col("word").substr(i, lit(1))).as("syms"))
-    var words = trainWords.localCheckpoint()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    var rank = 1
-    var exhausted = false
-    // previous generation's checkpoint blocks, releasable only AFTER the
-    // current (lazy) generation materializes — the trainWordPieceMerges
-    // discipline (r20: lazy per-rank rewrites fold into the next rank's
-    // collect, one scheduled job per rank instead of two)
-    var releasable: Option[DataFrame] = None
-    while (rank <= numMerges && !exhausted) {
-      // symbols are space-free (ASCII-printables minus the space the pair
-      // string joins on), so the "l r" pair string orders exactly like the
-      // (l, r) tuple and splits back losslessly
-      val top = words
-        .select(col("cnt"), explode(WordPairs(col("syms"), 1)).as("pair"))
-        .groupBy(col("pair")).agg(sum(col("cnt")).as("n"))
-        .select(split(col("pair"), " ").getItem(0).as("l"),
-          split(col("pair"), " ").getItem(1).as("r"), col("n"))
-        .orderBy(col("n").desc, col("l"), col("r"))
-        .limit(1).collect()
-      // that collect was the current generation's first action — its lazy
-      // checkpoint is materialized, the superseded rank's blocks can go
-      releasable.foreach(org.apache.spark.sql.graft.CheckpointUtil.unpersist(_))
-      releasable = None
-      if (top.isEmpty) exhausted = true // every word is a single symbol
-      else {
-        val (l, r, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((rank, l, r, l + r, n))
-        releasable = Some(words)
-        words = words
-          .withColumn("syms", BpeMergeAdjacent(col("syms"), l, r))
-          .localCheckpoint(false) // truncate the per-rank growing lineage
-        rank += 1
-      }
-    }
-    releasable.foreach(org.apache.spark.sql.graft.CheckpointUtil.unpersist(_))
-    // the merge table lives on the driver; nothing reads the final
-    // vocabulary snapshot either
-    org.apache.spark.sql.graft.CheckpointUtil.unpersist(words)
     import spark.implicits._
+    // the merge loop: one task over the whole vocabulary, back comes only
+    // the merge table (see the cost model above)
+    val merges = trainWords.coalesce(1)
+      .mapPartitions(rows => BpeTrainer.train(
+        rows.map(r => (r.getLong(0),
+          r.getSeq[String](1).iterator.map(UTF8String.fromString).toArray)),
+        numMerges).iterator)
+      .collect()
     merges.toSeq.toDF("rank", "left_sym", "right_sym", "merged", "n")
   }
 
@@ -1640,12 +1608,15 @@ object TextAnalysis {
     * sequence replays bit-for-bit in any engine; no float ratio ever
     * enters. Returns `(rank, left_sym, right_sym, merged, n, score_q)`.
     *
-    * Shape at 100 TB: the [[trainBpeMerges]] discipline — ONE corpus scan
-    * builds the word-frequency table (checkpointed), then each rank is two
-    * vocabulary-sized aggregations (adjacent pairs + symbol marginals, the
-    * marginal join riding the tiny pair table) and a 1-row collect; the
-    * corpus never re-enters. Merge application is the same
-    * [[org.apache.spark.sql.graft.BpeMergeAdjacent]] kernel with the
+    * Shape at 100 TB: a distributed per-rank loop — ONE corpus scan builds
+    * the word-frequency table (checkpointed), then each rank is two
+    * vocabulary-sized aggregations (symbol marginals collected as an
+    * alphabet-bounded map, adjacent pairs reduced to a 1-row argmax
+    * collect) over a lazily checkpointed symbol table whose previous
+    * generation is released once its successor materializes; the corpus
+    * never re-enters, but a k-merge train is k rounds of Spark jobs (unlike
+    * [[trainBpeMerges]]' single in-task loop). Merge application is the
+    * same [[org.apache.spark.sql.graft.BpeMergeAdjacent]] kernel with the
     * marker-stripped merged symbol.
     */
   def trainWordPieceMerges(
@@ -1732,6 +1703,9 @@ object TextAnalysis {
         rank += 1
       }
     }
+    // a numMerges exit leaves `releasable` holding the generation the last
+    // collects read (the final lazy rewrite never ran): release it too
+    releasable.foreach(org.apache.spark.sql.graft.CheckpointUtil.unpersist(_))
     org.apache.spark.sql.graft.CheckpointUtil.unpersist(words)
     import spark.implicits._
     merges.toSeq.toDF("rank", "left_sym", "right_sym", "merged", "n", "score_q")

@@ -388,8 +388,9 @@ object WordShingleHashes {
   * occurrence is replaced by their concatenation, greedy LEFTMOST and
   * non-overlapping (`[a,a,a]` with pair `(a,a)` → `[aa,a]`) — the classic
   * byte-pair-encoding apply step. A native expression because it runs once
-  * per vocabulary word per merge rank inside the training loop; the
-  * stateful scan (skip-2-on-match) has no clean codegen'd HOF form.
+  * per vocabulary word per merge rank inside the distributed WordPiece
+  * training loop and the rank-order replays; the stateful scan
+  * (skip-2-on-match) has no clean codegen'd HOF form.
   */
 case class BpeMergeAdjacent(child: Expression, left: String, right: String,
     mergedOverride: Option[String] = None)
@@ -425,25 +426,37 @@ case class BpeMergeAdjacent(child: Expression, left: String, right: String,
 object BpeMergeAdjacent {
   def merge(arr: ArrayData, l: UTF8String, r: UTF8String, m: UTF8String): ArrayData = {
     val n = arr.numElements()
-    val out = new Array[Any](n)
+    val syms = new Array[UTF8String](n)
+    var i = 0
+    while (i < n) { syms(i) = arr.getUTF8String(i); i += 1 }
+    val merged = mergeSyms(syms, l, r, m)
+    val out = new Array[Any](merged.length)
+    System.arraycopy(merged, 0, out, 0, merged.length)
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
+  /** The one BPE apply rule — every `(l, r)` occurrence becomes `m`, greedy
+    * leftmost non-overlapping — shared by this kernel and the in-task
+    * trainer ([[BpeTrainer]]), so training and replay cannot drift apart.
+    * Returns `syms` itself (no copy) when the pair does not occur.
+    */
+  def mergeSyms(syms: Array[UTF8String], l: UTF8String, r: UTF8String,
+      m: UTF8String): Array[UTF8String] = {
+    val n = syms.length
+    val out = new Array[UTF8String](n)
     var k = 0
     var i = 0
     while (i < n) {
-      if (i + 1 < n && arr.getUTF8String(i).equals(l) && arr.getUTF8String(i + 1).equals(r)) {
+      if (i + 1 < n && syms(i).equals(l) && syms(i + 1).equals(r)) {
         out(k) = m
         i += 2
       } else {
-        out(k) = arr.getUTF8String(i)
+        out(k) = syms(i)
         i += 1
       }
       k += 1
     }
-    val trimmed = if (k == n) out else {
-      val t = new Array[Any](k)
-      System.arraycopy(out, 0, t, 0, k)
-      t
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(trimmed)
+    if (k == n) syms else java.util.Arrays.copyOf(out, k)
   }
 
   def apply(syms: Column, left: String, right: String): Column =

@@ -44,11 +44,15 @@ class PlanGateSpec extends SparkTestBase {
     // seven-stage capstone: the canonicalize stage runs minhash + CC
     // checkpoints at build time (the pipeline_canonicalize signature)
     "pipeline_crawl_full",
-    "knn_ivf", "kmeans_clusters", "kmeans_sample_train", "bpe_merges",
-    "bpe_encode", "bpe_merges_bytes", "bpe_encode_bytes",
-    // the same per-rank checkpointed train loop (likelihood argmax collects
-    // 1 row per rank); the encode query trains first, then the vocabulary
-    // rides one broadcast into the scan-speed kernel
+    "knn_ivf", "kmeans_clusters", "kmeans_sample_train",
+    // the BPE train is EAGER: the word-frequency aggregation and the
+    // in-task merge loop run while the frame is BUILT, and the returned
+    // merge table is a driver-local relation (the encode queries train
+    // first, then the table rides one broadcast into the scan-speed kernel)
+    "bpe_merges", "bpe_encode", "bpe_merges_bytes", "bpe_encode_bytes",
+    // per-rank checkpointed train loop (likelihood argmax collects 1 row
+    // per rank); the encode query trains first, then the vocabulary rides
+    // one broadcast into the scan-speed kernel
     "wordpiece_merges", "wordpiece_encode",
     "pipeline_cluster_shard", "pipeline_canonicalize",
     // EM rounds collect the bounded usage table per round while the frame

@@ -593,10 +593,10 @@ class TextAnalysisSpec extends SparkTestBase {
 
   test("trainBpeMerges: superseded per-rank checkpoints are released (no storage leak)") {
     import spark.implicits._
-    // each rank localCheckpoints the symbol table; without explicit release a
-    // production 32k-merge run retains 32k dead vocabulary copies in executor
-    // storage. The trainer must leave NOTHING persisted behind (the merge
-    // table is driver-local), so the persistent-RDD census is flat.
+    // a merge loop that persisted per-rank vocabulary snapshots would retain
+    // one dead copy per rank in executor storage. The trainer must leave
+    // NOTHING persisted behind (the merge table is driver-local), so the
+    // persistent-RDD census is flat.
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val docs = Seq(
       (1L, "low low lower newest newest widest"),
@@ -606,6 +606,107 @@ class TextAnalysisSpec extends SparkTestBase {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty,
       s"trainBpeMerges left ${leaked.size} checkpointed RDDs persisted: $leaked")
+  }
+
+  test("trainWordPieceMerges: superseded per-rank checkpoints are released (no storage leak)") {
+    import spark.implicits._
+    // the numMerges exit is the path that used to keep one generation: the
+    // merge count must be reached, not exhausted
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val docs = Seq(
+      (1L, "low low lower newest newest widest"),
+      (2L, "newest lowest low widest widest")).toDF("doc_id", "text")
+    val merges = TextAnalysis.trainWordPieceMerges(docs, "text", numMerges = 8)
+    assert(merges.count() === 8L)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty,
+      s"trainWordPieceMerges left ${leaked.size} checkpointed RDDs persisted: $leaked")
+  }
+
+  private def bpeRows(texts: Seq[String], numMerges: Int,
+      byteLevel: Boolean = false): Seq[(Int, String, String, String, Long)] = {
+    import spark.implicits._
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    TextAnalysis.trainBpeMerges(docs, "text", numMerges, byteLevel = byteLevel)
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
+      .sortBy(_._1).toSeq
+  }
+
+  /** Seeded corpora over a tiny alphabet: dense count ties, same-symbol
+    * runs (overlapping pairs), and enough distinct words for many ranks.
+    */
+  private def randomCorpus(seed: Long, nDocs: Int, alphabet: Seq[String]): Seq[String] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(nDocs) {
+      Seq.fill(1 + rnd.nextInt(10)) {
+        if (rnd.nextInt(5) == 0) alphabet.head * (2 + rnd.nextInt(5))
+        else Seq.fill(1 + rnd.nextInt(7))(alphabet(rnd.nextInt(alphabet.size))).mkString
+      }.mkString(" ")
+    }
+  }
+
+  test("trainBpeMerges: in-task trainer == reference loop on seeded random corpora") {
+    for (seed <- 1L to 5L) {
+      val texts = randomCorpus(seed, 24, Seq("a", "b", "c", "d"))
+      assert(bpeRows(texts, 60) === referenceBpe(texts, 60), s"seed $seed")
+    }
+    // early exhaustion: far more merges asked for than the vocabulary holds
+    val small = randomCorpus(11L, 6, Seq("a", "b", "c"))
+    val all = bpeRows(small, 1000)
+    assert(all.size < 1000 && all === referenceBpe(small, 1000))
+    // byte mode on multilingual text (2-, 3- and 4-byte UTF-8 symbols)
+    for (seed <- 21L to 23L) {
+      val texts = randomCorpus(seed, 16, Seq("a", "é", "日", "🙂", "b"))
+      assert(bpeRows(texts, 40, byteLevel = true) === referenceByteBpe(texts, 40), s"seed $seed")
+    }
+  }
+
+  test("trainBpeMerges: (l, r) tie order, overlapping runs, single-word winners") {
+    // every pair counts 1: the table is the (l, r) order, left symbol first
+    val ties = Seq("ca ab ac ba")
+    assert(bpeRows(ties, 4).map(m => (m._2, m._3)) ===
+      Seq(("a", "b"), ("a", "c"), ("b", "a"), ("c", "a")))
+    assert(bpeRows(ties, 4) === referenceBpe(ties, 4))
+    // overlapping runs merge greedy leftmost: aaaa -> [aa, aa], aaaaa ->
+    // [aa, aa, a]; then the vocabulary runs out after three ranks
+    val runs = Seq("aaaa aaaaa")
+    assert(bpeRows(runs, 10) === Seq(
+      (1, "a", "a", "aa", 7L), (2, "aa", "aa", "aaaa", 2L), (3, "aaaa", "a", "aaaaa", 1L)))
+    assert(bpeRows(runs, 10) === referenceBpe(runs, 10))
+    // the first five winners live in ONE word only (qwerty x9)
+    val one = Seq("qwerty " * 9 + "ab ab ba cab", "abc bca")
+    val got = bpeRows(one, 12)
+    assert(got === referenceBpe(one, 12))
+    assert(got.take(5).forall(m => "qwerty".contains(m._4)), got)
+  }
+
+  test("trainBpeMerges: the merge count buys no Spark jobs (one in-task loop)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val docs = spark.read.parquet(s"${sf()}/documents.parquet").limit(40)
+    def jobsFor(numMerges: Int): Int = {
+      val tag = s"bpe-jobs-$numMerges"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty("graft.spec") == tag)
+            jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      spark.sparkContext.setLocalProperty("graft.spec", tag)
+      val merges = try {
+        val m = TextAnalysis.trainBpeMerges(docs, "text", numMerges)
+        org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext, 10000L)
+        m
+      } finally {
+        spark.sparkContext.setLocalProperty("graft.spec", null)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(merges.count() === numMerges)
+      jobs.get
+    }
+    val (j12, j48) = (jobsFor(12), jobsFor(48))
+    assert(j12 === j48, s"12 merges ran $j12 jobs, 48 merges ran $j48")
+    assert(j12 <= 3, s"$j12 jobs for one train")
   }
 
   test("bpeEncode: kernel's min-rank-first loop == rank-order replay on a TRAINED table") {
